@@ -119,12 +119,12 @@ class EngineConfig:
     # stream_sequence chain state layout: 0 = one state row per link key;
     # >0 = hash-bucketed vectorized matcher (streaming/sequence.py)
     stream_key_buckets: int = 0
-    # [materialize] serve_first: SHOW on append-only segment shapes
-    # returns `stored ∪ delta` immediately (first frames stream at
-    # storage-read latency — reference StoredFrameStreamer parity,
-    # src/command/handlers/show/orchestrator.rs:123-170) and folds the
-    # delta into the stored layout on a background thread; false =
-    # refresh-then-serve (SHOW blocks on the full delta persist)
+    # [materialize] serve_first: a stale SHOW returns `stored ∪ delta`
+    # (event results) or the finalize of merge(pinned state, delta)
+    # (aggregate / COMPARE results) immediately — reference
+    # StoredFrameStreamer parity, src/command/handlers/show/
+    # orchestrator.rs:123-170 — and a background fold persists the same
+    # rows; false = refresh-then-serve (SHOW blocks on the persist)
     materialize_serve_first: bool = True
     # [schema] allow_core_shadow: accept payload fields named after core
     # columns (timestamp/event_id/...) by storing them under

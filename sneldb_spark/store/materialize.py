@@ -8,15 +8,18 @@ plus a high-water mark `(timestamp, event_id)` over the *source* events.
   Parquet, and records the high-water mark of the scanned source. For a
   plain aggregate query it ALSO persists mergeable per-group partial
   state (see plans/aggregates.py).
-- `SHOW name` refreshes first: for non-aggregate queries only the delta
-  (`ts > hwm OR (ts = hwm AND id > hwm_id)`) is scanned, appended, and
-  deduped by event_id — at 100 TB this is the difference between an
-  incremental touch-up and a full rescan. Plain aggregate queries merge
-  a delta partial aggregate into the stored state (reference:
+- `SHOW name` on a stale result serves first and refreshes in the
+  background. Event-shaped results append: only the delta
+  (`ts > hwm OR (ts = hwm AND id > hwm_id)`) is scanned and served
+  beside the stored segments, and a fold writes it as a new interval
+  segment — at 100 TB the difference between an incremental touch-up and
+  a full rescan. Aggregate results (plain, sequence, chain, COMPARE)
+  merge a delta partial aggregate into the stored state (reference:
   src/command/handlers/show/delta/refresher.rs) — a delta scan plus a
-  state-sized shuffle, never a history rescan. Sequence results and
-  group-LIMIT aggregates (where new rows can change WHICH groups
-  qualify) recompute when (and only when) the high-water mark moved.
+  state-sized shuffle, never a history rescan; SHOW serves the finalized
+  merge and the fold publishes that same merge as the next state.
+  Shapes with no incremental form (group-LIMIT aggregates, retention
+  windows on event results) recompute when the high-water mark moved.
 """
 
 from __future__ import annotations
@@ -50,13 +53,13 @@ class Materializer:
         # serve-then-refresh SHOW (reference parity:
         # src/command/handlers/show/orchestrator.rs:123-170 — the
         # StoredFrameStreamer spawns BEFORE the delta pipeline, so
-        # time-to-first-frame is a storage read, not a refresh): for the
-        # append-only segment shapes (plain / sequence / chain event
-        # results) SHOW returns `stored-segments ∪ lazily-computed-delta`
-        # immediately and folds the delta into the stored layout on a
-        # background thread. Aggregate/COMPARE shapes stay synchronous —
-        # their result is a state MERGE, not an append, so there is no
-        # stored-first stream to serve.
+        # time-to-first-frame is not a persist). Event-shaped results
+        # (plain / sequence / chain) serve `stored-segments ∪ lazily-
+        # computed-delta`; state-merge results (agg / seq-agg / chain-agg
+        # / COMPARE) serve the finalize of ONE eagerly checkpointed
+        # merge(pinned state, delta). Either way a background fold
+        # writes and publishes the same rows the SHOW served; SHOW never
+        # waits on a staged write or a publish.
         self.serve_first = serve_first
         # Fold-side segment-count bound: every refresh appends one
         # interval dir, and the serve path's stored-plan cost (file
@@ -104,11 +107,12 @@ class Materializer:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, p)
 
-    def _parallel_writes(self, *thunks) -> None:
-        """Run independent write actions concurrently (each is a Spark
-        job; actions are only sequential because the driver calls them
-        sequentially — overlapping them back-fills the tail of one job
-        with the next one's tasks). Callers pass writes that are
+    def _parallel(self, *thunks) -> list:
+        """Run independent actions concurrently and return their results
+        in order (each is a Spark job; actions are only sequential
+        because they are called one after another — overlapping them
+        back-fills the tail of one job with the next one's tasks).
+        Callers pass writes (or state-merge builds) that are
         mutually independent AND whose shared inputs are already
         materialized (persisted / checkpointed / written), so no input
         is computed twice. Worker threads re-tag the caller's scheduler
@@ -118,9 +122,7 @@ class Materializer:
         about to clean up."""
         thunks = [t for t in thunks if t is not None]
         if len(thunks) <= 1:
-            for t in thunks:
-                t()
-            return
+            return [t() for t in thunks]
         from concurrent.futures import ThreadPoolExecutor
 
         from sneldb_spark.session import set_scheduler_pool
@@ -135,16 +137,18 @@ class Materializer:
         def run(t):
             if pool is not None:
                 set_scheduler_pool(self.engine.spark, pool)
-            t()
+            return t()
 
         with ThreadPoolExecutor(
             max_workers=min(4, len(thunks)),
             thread_name_prefix="sneldb-mat-write",
         ) as ex:
-            errs = [f.exception() for f in [ex.submit(run, t) for t in thunks]]
+            futs = [ex.submit(run, t) for t in thunks]
+            errs = [f.exception() for f in futs]
         first = next((e for e in errs if e is not None), None)
         if first is not None:
             raise first
+        return [f.result() for f in futs]
 
     # -- background fold machinery (serve-then-refresh SHOW) ---------------
     def _register_serve(self, name: str, frame: DataFrame) -> None:
@@ -599,9 +603,6 @@ class Materializer:
         once, mergeable partial state over the (window-filtered)
         completed chains, result from the state's finalize — the same
         one-estimator rule every aggregate materialization follows."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
-
-        approx = self.engine.compiler.approx_count_unique
         completed, n, hwm, cleanup, write_state = self._chain_initial_match(
             name, q
         )
@@ -617,16 +618,11 @@ class Materializer:
         # (one-estimator rule), just without the write -> read-back leg.
         state_ck = state.localCheckpoint(eager=True)
         manifest["state_keys"] = keys
-
-        def _write_agg_state():
-            state_ck.write.mode("overwrite").parquet(spath)
-            self._write_state_hwm(spath, *hwm)
-
-        self._parallel_writes(
-            _write_agg_state,
-            lambda: finalize_partial_state(
-                state_ck, q.aggs, keys, approx_unique=approx
-            ).write.mode("overwrite").parquet(path),
+        # write_state lands the state dir's consumed-hwm marker
+        self._parallel(
+            lambda: state_ck.write.mode("overwrite").parquet(spath),
+            lambda: self._finalize(q, keys, state_ck)
+            .write.mode("overwrite").parquet(path),
             write_state,
         )
         cleanup()
@@ -706,15 +702,16 @@ class Materializer:
         With a `served` bundle at the same lower bound, the fold writes
         the serve path's checkpointed frames — no second advance."""
         lower = self._published_lower(manifest, self._state_path(name))
+        if tuple(lower) >= tuple(cur):
+            return  # an earlier (crashed) fold already appended this slice
         if served is not None and tuple(served["lower"]) == tuple(lower):
             completed, new_pend, cands, n = (
                 served["completed"], served["new_pend"],
                 served["cands"], served["n"],
             )
-            cleanup = lambda: None  # noqa: E731
         else:
-            lower, completed, new_pend, cands, n, cleanup = (
-                self._chain_delta_match(name, q, manifest, cur)
+            lower, completed, new_pend, cands, n = self._chain_delta_match(
+                name, q, manifest, cur
             )
         seg = os.path.join(self._live(path), f"d_{lower[0]}_{lower[1]}")
         state = self._state_path(name)
@@ -723,72 +720,50 @@ class Materializer:
         # segment FIRST; a crashed rerun overwrites the same slice
         completed.write.mode("overwrite").parquet(seg)
         self._write_chain_next_state(nxt, q, new_pend, cands, n, cur)
-        cleanup()
+        self._write_state_hwm(nxt, *cur)
         self.storage.publish_dir(state)
 
     def _refresh_chain_agg(self, name: str, q, manifest: dict, path: str,
-                           cur: tuple[int, int]):
+                           cur: tuple[int, int], served: dict | None = None):
         """Incremental chain-AGGREGATE refresh: partial-aggregate only
         the delta's completed (window-filtered) chains, merge into stored
         per-group state, finalize — plus the same per-step pending/
-        boundary swap the plain chain refresh does. Crash ordering
-        mirrors _refresh_sequence_agg: the visible result replaces
-        before the state swap flags complete, so a crash in between
-        reruns the same delta against the OLD state idempotently."""
-        from sneldb_spark.plans.aggregates import (
-            finalize_partial_state,
-            merge_partial_states,
+        boundary swap the plain chain refresh does (_chain_agg_bundle).
+        The synchronous SHOW and the background fold both run this."""
+        self._refresh_merged(
+            self._chain_agg_bundle, name, q, manifest, path, cur, served
         )
 
-        spark = self.engine.spark
-        keys = manifest["state_keys"]
-        approx = self.engine.compiler.approx_count_unique
-        lower, completed, new_pend, cands, n, cleanup = self._chain_delta_match(
-            name, q, manifest, cur
+    def _chain_agg_bundle(self, name: str, q, manifest: dict,
+                          cur: tuple[int, int]) -> dict:
+        def delta(d: str, lower: tuple[int, int]):
+            parts = self.engine.compiler.chain_parts(q, upper=cur)
+            state = {
+                p: self._read_state_part(d, p)
+                for p in self._chain_state_parts(len(parts[0]))
+            }
+            completed, new_pend, cands, n = self._chain_delta_frames(
+                q, cur, lower, state, parts
+            )
+            delta_state, _ = self.engine.compiler.compile_chain_aggregate_partial(
+                q, completed
+            )
+            return delta_state, [
+                lambda nxt: self._write_chain_next_state(
+                    nxt, q, new_pend, cands, n, cur
+                )
+            ]
+
+        return self._merge_bundle(
+            self._state_path(name), manifest, cur, q.aggs,
+            manifest["state_keys"], delta, sub="agg_state",
         )
-        spath = self._seq_agg_state_path(name)
-        delta_state, _ = self.engine.compiler.compile_chain_aggregate_partial(
-            q, completed
-        )
-        merged = merge_partial_states(
-            spark.read.parquet(spath).unionByName(
-                delta_state, allowMissingColumns=True
-            ),
-            q.aggs, keys, approx_unique=approx,
-        )
-        state = self._state_path(name)
-        nxt = self.storage.stage_path(state)
-        self.storage.remove_tree(nxt)
-        nxt_agg = os.path.join(nxt, "agg_state")
-        # materialize the merge ONCE (eager localCheckpoint — this also
-        # materializes the stepwise-advance checkpoints the carry state
-        # reads), then stage the merged state, its finalize, and the
-        # per-step carry state concurrently; the state dir and the
-        # result derive from the same materialized rows (one-estimator
-        # rule), and nothing is visible until the publishes below
-        merged_ck = merged.localCheckpoint(eager=True)
-        final = finalize_partial_state(
-            merged_ck, q.aggs, keys, approx_unique=approx
-        )
-        self._parallel_writes(
-            lambda: merged_ck.write.mode("overwrite").parquet(nxt_agg),
-            lambda: final.write.mode("overwrite").parquet(
-                self.storage.stage_path(path)
-            ),
-            lambda: self._write_chain_next_state(nxt, q, new_pend, cands, n, cur),
-        )
-        self.storage.publish_dir(path)
-        cleanup()
-        # state publish AFTER the data replace: a promoted new state must
-        # imply the visible result already reflects the merged aggregate
-        self.storage.publish_dir(state)
 
     def _write_chain_next_state(self, nxt: str, q, new_pend, cands, n: int,
                                 cur: tuple[int, int]):
         """Every per-step pending/boundary frame in ONE partitioned write
         (their shared inputs — the stepwise advance checkpoints — were
-        materialized by the caller's segment write); the hwm marker lands
-        after it."""
+        materialized by the caller's segment or merge)."""
         cur_ts = cur[0]
         gap = q.sequence_within
         parts: dict[str, DataFrame] = {}
@@ -804,34 +779,32 @@ class Materializer:
                 F.col("timestamp").cast("long") == F.lit(cur_ts)
             )
         self._write_state_parts(nxt, parts)
-        self._write_state_hwm(nxt, cur[0], cur[1])
+
+    @staticmethod
+    def _chain_state_parts(n: int) -> list[str]:
+        """Carry-state part names of an n-step chain."""
+        return [f"pending_s{i}" for i in range(n - 1)] + [
+            f"boundary_{j}" for j in range(1, n)
+        ]
 
     def _chain_delta_match(self, name: str, q, manifest: dict,
                            cur: tuple[int, int]):
         """The stepwise delta advance against the PUBLISHED state paths
         (fold/sync path — the serve path runs the same builder over
         pinned snapshots); returns (lower, completed [window-filtered],
-        new_pend frames, cands, n, cleanup). cleanup is a no-op kept
-        for call-site symmetry: the per-step advances are GC-scoped
-        lazy localCheckpoints now, not persists."""
-        spark = self.engine.spark
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(self._state_path(name))
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = marker
-        parts = self.engine.compiler.chain_parts(q, upper=cur)
-        n = len(parts[0])
+        new_pend frames, cands, n). The per-step advances are GC-scoped
+        lazy localCheckpoints."""
         sd = self._state_path(name)
+        lower = self._published_lower(manifest, sd)
+        parts = self.engine.compiler.chain_parts(q, upper=cur)
         state = {
-            f"pending_s{i}": self._read_state_part(sd, f"pending_s{i}")
-            for i in range(n - 1)
+            p: self._read_state_part(sd, p)
+            for p in self._chain_state_parts(len(parts[0]))
         }
-        for j in range(1, n):
-            state[f"boundary_{j}"] = self._read_state_part(sd, f"boundary_{j}")
         completed, new_pend, cands, n = self._chain_delta_frames(
             q, cur, lower, state, parts
         )
-        return lower, completed, new_pend, cands, n, lambda: None
+        return lower, completed, new_pend, cands, n
 
     def _chain_agg_incrementable(self, q, manifest: dict) -> bool:
         """Chain AGGREGATES: completed chains are append-only per refresh
@@ -960,13 +933,12 @@ class Materializer:
         return a, b, kind, link, ts_a, ts_b
 
     def _seq_delta_candidates(
-        self, name: str, q, lower: tuple[int, int], upper: tuple[int, int]
+        self, sd: str, q, lower: tuple[int, int], upper: tuple[int, int]
     ):
-        """(a_cand, b_cand, kind, link): carried state unioned with the
-        (lower, upper]-bounded delta of each side — the full candidate
-        set for an incremental re-match."""
+        """(a_cand, b_cand, kind, link): the carried state in state dir
+        `sd` unioned with the (lower, upper]-bounded delta of each side —
+        the full candidate set for an incremental re-match."""
         a, b, kind, link, _ts_a, _ts_b = self._seq_sides(q, upper=upper)
-        sd = self._state_path(name)
         a_cand = self._read_state_part(sd, "pending_a").unionByName(
             self._delta_slice(a, *lower), allowMissingColumns=True
         )
@@ -1103,9 +1075,6 @@ class Materializer:
             # query path (approx_count_distinct) and the sketch estimate
             # differ slightly, and a refresh must never silently change
             # which one the user is looking at.
-            from sneldb_spark.plans.aggregates import finalize_partial_state
-
-            approx = self.engine.compiler.approx_count_unique
             hwm = self._pin_snapshot(q)
             # read closed at the probed mark: a row racing in lands in
             # the next delta exactly once, never in both
@@ -1128,11 +1097,10 @@ class Materializer:
                 )
                 self._write_state_hwm(self._state_path(name), *hwm)
 
-            self._parallel_writes(
+            self._parallel(
                 _write_agg_state,
-                lambda: finalize_partial_state(
-                    state_ck, q.aggs, keys, approx_unique=approx
-                ).write.mode("overwrite").parquet(path),
+                lambda: self._finalize(q, keys, state_ck)
+                .write.mode("overwrite").parquet(path),
             )
             manifest["hwm_ts"], manifest["hwm_id"] = hwm
             self._write_manifest(name, manifest)
@@ -1233,10 +1201,8 @@ class Materializer:
         state over the pairs plus the sequence carry state, and derive
         the visible result from the state's finalize — the same
         one-estimator rule the plain aggregate path follows."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
         from sneldb_spark.plans.sequence import sequence_match
 
-        approx = self.engine.compiler.approx_count_unique
         hwm_ts, hwm_id = self._pin_snapshot(q)
         a, b, kind, link, ts_a, ts_b = self._seq_sides(q, upper=(hwm_ts, hwm_id))
         pairs = sequence_match(a, b, link, kind, ts_a=ts_a, ts_b=ts_b).persist()
@@ -1256,21 +1222,16 @@ class Materializer:
             pending, boundary = self._seq_carry_state(
                 a, b, kind, link, pairs, hwm_ts, max_gap=q.sequence_within
             )
-
-            def _write_agg_state():
-                state_ck.write.mode("overwrite").parquet(spath)
-                self._write_state_hwm(spath, hwm_ts, hwm_id)
-
-            self._parallel_writes(
-                _write_agg_state,
-                lambda: finalize_partial_state(
-                    state_ck, q.aggs, keys, approx_unique=approx
-                ).write.mode("overwrite").parquet(path),
+            self._parallel(
+                lambda: state_ck.write.mode("overwrite").parquet(spath),
+                lambda: self._finalize(q, keys, state_ck)
+                .write.mode("overwrite").parquet(path),
                 lambda: self._write_state_parts(
                     self._state_path(name),
                     {"pending_a": pending, "boundary_b": boundary},
                 ),
             )
+            self._write_state_hwm(self._state_path(name), hwm_ts, hwm_id)
         finally:
             pairs.unpersist()
         return hwm_ts, hwm_id
@@ -1292,10 +1253,9 @@ class Materializer:
         cur_ts, _cur_id = cur
         # The in-state marker overrides a manifest that a crash left stale
         # (same recovery contract as the aggregate path).
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(self._state_path(name))
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = marker
+        lower = self._published_lower(manifest, self._state_path(name))
+        if tuple(lower) >= tuple(cur):
+            return  # an earlier (crashed) fold already appended this slice
         if served is not None and tuple(served["lower"]) == tuple(lower):
             # fold from the served bundle: the as-of match was built
             # (and lazily checkpointed) by the serve path — write those
@@ -1305,7 +1265,7 @@ class Materializer:
             new_pairs = served["pairs"]
         else:
             a_cand, b_cand, kind, link = self._seq_delta_candidates(
-                name, q, lower, cur
+                self._state_path(name), q, lower, cur
             )
             new_pairs = sequence_match(a_cand, b_cand, link, kind).localCheckpoint(
                 eager=False
@@ -1347,88 +1307,48 @@ class Materializer:
         self.storage.publish_dir(state)
 
     def _refresh_sequence_agg(self, name: str, q, manifest: dict, path: str,
-                              cur: tuple[int, int]):
-        """Incremental sequence-aggregate SHOW: compute the DELTA PAIRS
-        exactly as the event-shaped refresh does, partial-aggregate only
-        them, merge into the stored per-group state, finalize. Exact
-        because the pair set is append-only (see _refresh_sequence) and
-        every aggregate op merges over disjoint row sets."""
-        from sneldb_spark.plans.aggregates import (
-            finalize_partial_state,
-            merge_partial_states,
+                              cur: tuple[int, int], served: dict | None = None):
+        """Incremental sequence-aggregate refresh: compute the DELTA
+        PAIRS exactly as the event-shaped refresh does, partial-aggregate
+        only them, merge into the stored per-group state, finalize
+        (_seq_agg_bundle). Exact because the pair set is append-only (see
+        _refresh_sequence) and every aggregate op merges over disjoint
+        row sets. The synchronous SHOW and the background fold both run
+        this."""
+        self._refresh_merged(
+            self._seq_agg_bundle, name, q, manifest, path, cur, served
         )
+
+    def _seq_agg_bundle(self, name: str, q, manifest: dict,
+                        cur: tuple[int, int]) -> dict:
         from sneldb_spark.plans.sequence import sequence_match
 
-        spark = self.engine.spark
-        approx = self.engine.compiler.approx_count_unique
-        cur_ts, _cur_id = cur
-        keys = manifest["state_keys"]
-        spath = self._seq_agg_state_path(name)
-
-        # Crash recovery: the hwm marker INSIDE the state dir swaps
-        # atomically with the state, so if a previous refresh died after
-        # the swap but before the manifest write, the marker is ahead of
-        # the manifest and the already-merged slice is NOT re-merged.
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(spath)
-        if marker is not None and marker > lower:
-            lower = marker
-        a_cand, b_cand, kind, link = self._seq_delta_candidates(
-            name, q, lower, cur
-        )
-        new_pairs = sequence_match(a_cand, b_cand, link, kind).persist()
-        try:
+        def delta(d: str, lower: tuple[int, int]):
+            a_cand, b_cand, kind, link = self._seq_delta_candidates(
+                d, q, lower, cur
+            )
+            # lazily checkpointed: the merge below computes it once, and
+            # the fold's carry-state write reuses the blocks
+            pairs = sequence_match(a_cand, b_cand, link, kind).localCheckpoint(
+                eager=False
+            )
             delta_state, _ = self.engine.compiler.compile_sequence_aggregate_partial(
-                q, self._within_pairs(q, new_pairs)
+                q, self._within_pairs(q, pairs)
             )
-            merged_state = merge_partial_states(
-                spark.read.parquet(spath).unionByName(
-                    delta_state, allowMissingColumns=True
-                ),
-                q.aggs, keys, approx_unique=approx,
-            )
-            # materialize the merge ONCE (eager localCheckpoint), and
-            # everything below still sees only pre-refresh directories
-            # until the publish
-            state = self._state_path(name)
-            nxt = self.storage.stage_path(state)
-            self.storage.remove_tree(nxt)
-            nxt_agg = os.path.join(nxt, "agg_state")
-            merged_ck = merged_state.localCheckpoint(eager=True)
-            final = finalize_partial_state(
-                merged_ck, q.aggs, keys, approx_unique=approx,
-            )
-            new_pending, new_boundary = self._seq_carry_state(
-                a_cand, b_cand, kind, link, new_pairs, cur_ts,
+            pending, boundary = self._seq_carry_state(
+                a_cand, b_cand, kind, link, pairs, cur[0],
                 max_gap=q.sequence_within,
             )
+            return delta_state, [
+                lambda nxt: self._write_state_parts(
+                    nxt, {"pending_a": pending, "boundary_b": boundary}
+                )
+            ]
 
-            def _write_merged():
-                merged_ck.write.mode("overwrite").parquet(nxt_agg)
-                self._write_state_hwm(nxt_agg, cur[0], cur[1])
-
-            # three independent staged writes (BOTH carry frames in one
-            # partitioned write off the persisted match; the merged state
-            # and its finalize both off the one materialized merge — same
-            # rows in the state dir and under the result, one-estimator
-            # rule intact); nothing is visible until the publishes below
-            self._parallel_writes(
-                _write_merged,
-                lambda: self._write_state_parts(
-                    nxt,
-                    {"pending_a": new_pending, "boundary_b": new_boundary},
-                ),
-                lambda: final.write.mode("overwrite").parquet(
-                    self.storage.stage_path(path)
-                ),
-            )
-            self.storage.publish_dir(path)
-            # state publish AFTER the data replace: a promoted new state
-            # must imply the visible result already reflects the merged
-            # state
-            self.storage.publish_dir(state)
-        finally:
-            new_pairs.unpersist()
+        return self._merge_bundle(
+            self._state_path(name), manifest, cur, q.aggs,
+            manifest["state_keys"], delta, sub="agg_state",
+        )
 
     def _write_state_hwm(self, state_dir: str, hwm_ts: int, hwm_id: int):
         """Underscore-prefixed so Spark's parquet listing ignores it;
@@ -1452,111 +1372,175 @@ class Materializer:
             d = json.load(f)
         return d["ts"], d["id"]
 
-    def _swap_in_with_marker(self, df: DataFrame, path: str, mark: tuple[int, int]):
-        """_swap_in plus a consumed-hwm marker written INSIDE the new
-        directory before the rename, so state and its mark move
-        atomically — a crash right after the swap leaves a state that
-        self-describes how far it has merged (the refresh reads the
-        marker in preference to a stale manifest and never re-merges the
-        same delta)."""
-        staging = self.storage.stage_path(path)
-        df.write.mode("overwrite").parquet(staging)
-        self._write_state_hwm(staging, *mark)
-        self.storage.publish_dir(path)
+    # -- state-merge shapes: agg, seq-agg, chain-agg, COMPARE ----------------
+    # One refresh body per shape, run by the synchronous SHOW and by the
+    # background fold alike. A bundle is built against ONE published
+    # state snapshot (_snapshot): `lower` is that snapshot's consumed
+    # mark, `merged` the merge of its partial state with the
+    # (lower, cur] delta, eagerly localCheckpointed, and `writes` the
+    # staged writes of the next state dir (merged state first, then any
+    # carry state). A serve-first SHOW returns the finalize of `merged`
+    # and hands the bundle to the fold, which writes those same rows as
+    # the next state and result — one estimator by construction — unless
+    # a publish moved the snapshot under it, in which case it rebuilds.
 
-    def _merge_state_delta(
-        self,
-        spath: str,
-        q: ast.QueryCommand,
-        keys: list[str],
-        lower: tuple[int, int],
-        cur: tuple[int, int],
-    ):
-        """Merge the (lower, cur] delta of one aggregate query into the
-        partial state stored at `spath`. The state's own hwm marker wins
-        over the caller's lower bound (a crash between state swap and
-        manifest write must not double-merge), and the read is closed at
-        `cur` so a row racing in mid-refresh is consumed exactly once by
-        the next delta."""
+    def _snapshot(self, state_dir: str, manifest: dict, build):
+        """build(d, lower) against one resolved published copy `d` of
+        `state_dir`, lower = max(manifest hwm, d's marker). A concurrent
+        fold's publish can flip the pointer and GC the copy we resolved
+        mid-read (the grace window is a knob; gc_grace_versions=0 GCs
+        immediately) — the documented reader contract is re-resolve and
+        retry (docs/scale.md read-repair), which is exact here because
+        marker and state re-read together: a newer snapshot means a
+        larger lower and a correspondingly smaller delta."""
+        last: Exception | None = None
+        for _ in range(6):
+            d = self._live(state_dir)
+            try:
+                return build(d, self._published_lower(manifest, d))
+            except Exception as e:  # noqa: BLE001 — retry only read races
+                if not self._is_missing_file_err(e):
+                    raise
+                last = e
+        raise last
+
+    def _merge_bundle(self, state_dir: str, manifest: dict,
+                      cur: tuple[int, int], aggs, keys: list[str], delta,
+                      sub: str = "") -> dict:
+        """The bundle of one state dir whose partial state lives at
+        `sub` inside it. `delta(d, lower)` returns (delta partial state,
+        carry-state writes); it is skipped when the snapshot already
+        covers `cur` (a crash between state and result publish), and the
+        stored state itself is then what the result finalizes."""
         from sneldb_spark.plans.aggregates import merge_partial_states
 
-        marker = self._read_state_hwm(spath)
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = tuple(marker)
-        if tuple(lower) >= tuple(cur):
-            return
-        delta, _ = self.engine.compiler.compile_aggregate_partial(
-            q, hwm=lower, upper=cur
-        )
-        stored = self.engine.spark.read.parquet(self._live(spath))
-        merged = merge_partial_states(
-            stored.unionByName(delta), q.aggs, keys,
+        def at(d: str) -> str:
+            return os.path.join(d, sub) if sub else d
+
+        def build(d: str, lower: tuple[int, int]) -> dict:
+            merged = self.engine.spark.read.parquet(at(d))
+            writes = []
+            if tuple(lower) < tuple(cur):
+                delta_state, writes = delta(d, lower)
+                merged = merge_partial_states(
+                    merged.unionByName(delta_state, allowMissingColumns=True),
+                    aggs, keys,
+                    approx_unique=self.engine.compiler.approx_count_unique,
+                )
+            # eager: the served frame and the fold must not depend on
+            # state files a later publish may GC
+            merged = merged.localCheckpoint(eager=True)
+            return {
+                "lower": tuple(lower),
+                "merged": merged,
+                "writes": [
+                    lambda nxt: merged.write.mode("overwrite").parquet(at(nxt)),
+                    *writes,
+                ],
+            }
+
+        return self._snapshot(state_dir, manifest, build)
+
+    def _unmoved(self, served: dict | None, state_dir: str,
+                 manifest: dict) -> dict | None:
+        """`served` if its snapshot is still the published one, else
+        None (a publish landed since the SHOW built it)."""
+        if served is not None and tuple(served["lower"]) == tuple(
+            self._published_lower(manifest, state_dir)
+        ):
+            return served
+        return None
+
+    def _finalize(self, q, keys: list[str], merged: DataFrame) -> DataFrame:
+        from sneldb_spark.plans.aggregates import finalize_partial_state
+
+        return finalize_partial_state(
+            merged, q.aggs, keys,
             approx_unique=self.engine.compiler.approx_count_unique,
         )
-        self._swap_in_with_marker(merged, spath, cur)
+
+    def _commit_merge(self, path: str, final: DataFrame, cur: tuple[int, int],
+                      bundles: dict[str, dict]) -> None:
+        """Stage the next copy of every state dir (keyed by dir) whose
+        snapshot is behind `cur`, and the finalized result, all
+        concurrently; then publish the states (each with its marker at
+        `cur`) and the result LAST. Nothing is visible before the
+        publishes. A crash between them leaves a marker ahead of the
+        manifest: the next SHOW merges from the marker (never twice) and
+        republishes the result."""
+        staged = {}
+        for sdir, b in bundles.items():
+            if tuple(b["lower"]) < tuple(cur):
+                nxt = self.storage.stage_path(sdir)
+                self.storage.remove_tree(nxt)
+                staged[sdir] = nxt
+        result = self.storage.stage_path(path)
+        self._parallel(
+            lambda: final.write.mode("overwrite").parquet(result),
+            *[
+                (lambda w=w, nxt=nxt: w(nxt))
+                for sdir, nxt in staged.items()
+                for w in bundles[sdir]["writes"]
+            ],
+        )
+        for sdir, nxt in staged.items():
+            self._write_state_hwm(nxt, *cur)
+            self.storage.publish_dir(sdir)
+        self.storage.publish_dir(path)
+
+    def _refresh_merged(self, bundle_fn, name: str, q, manifest: dict,
+                        path: str, cur: tuple[int, int],
+                        served: dict | None) -> None:
+        sdir = self._state_path(name)
+        b = self._unmoved(served, sdir, manifest) or bundle_fn(
+            name, q, manifest, cur
+        )
+        self._commit_merge(
+            path, self._finalize(q, manifest["state_keys"], b["merged"]), cur,
+            {sdir: b},
+        )
+
+    def _serve_merged(self, bundle_fn):
+        """Serve function of a single-state shape: the finalize of the
+        bundle's merge, plus the bundle for the fold."""
+        def serve(name: str, q, manifest: dict, path: str, cur):
+            b = bundle_fn(name, q, manifest, cur)
+            return self._finalize(q, manifest["state_keys"], b["merged"]), b
+
+        return serve
 
     def _refresh_agg(self, name: str, q, manifest: dict, path: str,
-                     cur: tuple[int, int]):
-        """Incremental plain-aggregate SHOW: aggregate ONLY the rows past
-        the high-water mark (the delta scan's hwm predicate reaches the
-        Parquet scan, pushdown-tested), merge into the stored per-group
-        state, and finalize. The state write and the result write both
-        consume ONE materialized merge (eager localCheckpoint), so the
-        one-estimator rule holds exactly as it did when finalize re-read
-        the just-swapped state files — minus two sequential scheduler
-        turnarounds. The state's own hwm marker wins over the manifest
-        (a crash between state publish and manifest write must not
-        double-merge), and the read is closed at `cur` so a row racing
-        in mid-refresh is consumed exactly once by the next delta."""
-        from sneldb_spark.plans.aggregates import (
-            finalize_partial_state,
-            merge_partial_states,
+                     cur: tuple[int, int], served: dict | None = None):
+        """Incremental plain-aggregate refresh: aggregate ONLY the rows
+        past the high-water mark (the delta scan's hwm predicate reaches
+        the Parquet scan, pushdown-tested), merge into the stored
+        per-group state, and finalize. The read is closed at `cur`, so a
+        row racing in mid-refresh is consumed exactly once by the next
+        delta. The synchronous SHOW and the background fold both run
+        this."""
+        self._refresh_merged(
+            self._agg_bundle, name, q, manifest, path, cur, served
         )
 
-        approx = self.engine.compiler.approx_count_unique
-        keys = manifest["state_keys"]
-        spath = self._state_path(name)
-        lower = (manifest["hwm_ts"], manifest["hwm_id"])
-        marker = self._read_state_hwm(spath)
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = tuple(marker)
-        if tuple(lower) >= tuple(cur):
-            # state already covers cur (crash between state publish and
-            # manifest write): rebuild the visible result from the
-            # stored state without re-merging
-            self._swap_in(
-                finalize_partial_state(
-                    self.engine.spark.read.parquet(self._live(spath)),
-                    q.aggs, keys, approx_unique=approx,
-                ),
-                path,
-            )
-            return
-        delta, _ = self.engine.compiler.compile_aggregate_partial(
-            q, hwm=lower, upper=cur
+    def _agg_bundle(self, name: str, q, manifest: dict,
+                    cur: tuple[int, int]) -> dict:
+        return self._agg_side_bundle(
+            self._state_path(name), q, manifest["state_keys"], manifest, cur
         )
-        stored = self.engine.spark.read.parquet(self._live(spath))
-        merged_ck = merge_partial_states(
-            stored.unionByName(delta), q.aggs, keys, approx_unique=approx
-        ).localCheckpoint(eager=True)
-        sstage = self.storage.stage_path(spath)
 
-        def _write_state():
-            merged_ck.write.mode("overwrite").parquet(sstage)
-            self._write_state_hwm(sstage, *cur)
-
-        self._parallel_writes(
-            _write_state,
-            lambda: finalize_partial_state(
-                merged_ck, q.aggs, keys, approx_unique=approx
-            ).write.mode("overwrite").parquet(self.storage.stage_path(path)),
+    def _agg_side_bundle(self, state_dir: str, q, keys: list[str],
+                         manifest: dict, cur: tuple[int, int]) -> dict:
+        """Bundle of one plain aggregate's state dir (a materialized
+        aggregate, or one COMPARE side)."""
+        return self._merge_bundle(
+            state_dir, manifest, cur, q.aggs, keys,
+            lambda d, lower: (
+                self.engine.compiler.compile_aggregate_partial(
+                    q, hwm=lower, upper=cur
+                )[0],
+                [],
+            ),
         )
-        # same publish order as the previous sequential form: state
-        # (with its marker) first, then the visible result — a crash in
-        # between leaves marker > manifest hwm, which the next refresh
-        # resolves via the early branch above
-        self.storage.publish_dir(spath)
-        self.storage.publish_dir(path)
 
     # -- COMPARE materialization (extension) -------------------------------
     def _compare_state_dir(self, name: str, i: int) -> str:
@@ -1570,10 +1554,8 @@ class Materializer:
         finalize + the same full-outer side merge a direct COMPARE
         compiles — so a refresh and a fresh run go through one estimator
         and one merge implementation."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
         from sneldb_spark.plans.compare import merge_sides, side_labels
 
-        approx = self.engine.compiler.approx_count_unique
         labels = side_labels(c.queries, c.labels)
         hwm = self._pin_snapshot(c)
         keys_list, sps, writes = [], [], []
@@ -1593,12 +1575,9 @@ class Materializer:
         # each side's state write scans only ITS source slice — mutually
         # independent jobs, run together; the finalize frames are built
         # (and the merged result written) off the committed states after
-        self._parallel_writes(*writes)
+        self._parallel(*writes)
         finals = [
-            finalize_partial_state(
-                self.engine.spark.read.parquet(sp), s.aggs, keys,
-                approx_unique=approx,
-            )
+            self._finalize(s, keys, self.engine.spark.read.parquet(sp))
             for s, keys, sp in zip(c.queries, keys_list, sps)
         ]
         merge_sides(c.queries, labels, finals).write.mode("overwrite").parquet(path)
@@ -1606,38 +1585,53 @@ class Materializer:
         return hwm
 
     def _refresh_compare(self, name: str, c, manifest: dict, path: str,
-                         cur: tuple[int, int]):
-        """Incremental COMPARE SHOW: each side merges only ITS delta into
-        its stored partial state (per-side hwm markers make a mid-refresh
-        crash resumable without double-merging), then the group-count-
-        sized side merge re-runs — the sources are never rescanned."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
+                         cur: tuple[int, int], served: list | None = None):
+        """Incremental COMPARE refresh: each side merges only ITS delta
+        into its stored partial state (per-side markers make a
+        mid-publish crash resumable without double-merging), then the
+        group-count-sized side merge re-runs — the sources are never
+        rescanned. The synchronous SHOW and the background fold both run
+        this; a served side whose snapshot has not moved is reused."""
+        bundles = self._compare_bundles(name, c, manifest, cur, served)
+        self._commit_merge(
+            path, self._compare_final(c, manifest, bundles), cur,
+            {
+                self._compare_state_dir(name, i): b
+                for i, b in enumerate(bundles)
+            },
+        )
+
+    def _compare_bundles(self, name: str, c, manifest: dict,
+                         cur: tuple[int, int],
+                         served: list | None = None) -> list[dict]:
+        """One bundle per side — independent merges, built together."""
+        keys = manifest["compare_state_keys"]
+
+        def side(i: int, s) -> dict:
+            sdir = self._compare_state_dir(name, i)
+            return self._unmoved(
+                served[i] if served else None, sdir, manifest
+            ) or self._agg_side_bundle(sdir, s, keys[i], manifest, cur)
+
+        return self._parallel(*[
+            (lambda i=i, s=s: side(i, s)) for i, s in enumerate(c.queries)
+        ])
+
+    def _compare_final(self, c, manifest: dict, bundles: list[dict]) -> DataFrame:
         from sneldb_spark.plans.compare import merge_sides, side_labels
 
-        approx = self.engine.compiler.approx_count_unique
-        labels = side_labels(c.queries, c.labels)
-        lower = (manifest["hwm_ts"], manifest["hwm_id"])
-        # each side merges only ITS delta into ITS state dir (write +
-        # per-side publish, fully self-contained) — independent jobs,
-        # run together; the side merge reads the published states after
-        self._parallel_writes(*[
-            (lambda i=i, s=s: self._merge_state_delta(
-                self._compare_state_dir(name, i),
-                s, manifest["compare_state_keys"][i], lower, cur,
-            ))
-            for i, s in enumerate(c.queries)
-        ])
-        finals = [
-            finalize_partial_state(
-                self.engine.spark.read.parquet(
-                    self._live(self._compare_state_dir(name, i))
-                ),
-                s.aggs, manifest["compare_state_keys"][i],
-                approx_unique=approx,
-            )
-            for i, s in enumerate(c.queries)
-        ]
-        self._swap_in(merge_sides(c.queries, labels, finals), path)
+        keys = manifest["compare_state_keys"]
+        return merge_sides(
+            c.queries, side_labels(c.queries, c.labels),
+            [
+                self._finalize(s, keys[i], b["merged"])
+                for i, (s, b) in enumerate(zip(c.queries, bundles))
+            ],
+        )
+
+    def _serve_compare(self, name: str, c, manifest: dict, path: str, cur):
+        bundles = self._compare_bundles(name, c, manifest, cur)
+        return self._compare_final(c, manifest, bundles), bundles
 
     # -- SHOW -------------------------------------------------------------
     # -- serve-then-refresh builders ---------------------------------------
@@ -1723,6 +1717,11 @@ class Materializer:
 
     @staticmethod
     def _is_missing_file_err(e: Exception) -> bool:
+        """A read that lost its files to a concurrent publish's GC: the
+        JVM reports it in the message, a Python-side open (the marker or
+        the parts sidecar) as FileNotFoundError."""
+        if isinstance(e, FileNotFoundError):
+            return True
         s = str(e)
         return (
             "FAILED_READ_FILE" in s
@@ -1733,83 +1732,65 @@ class Materializer:
 
     def _pin_state_snapshot(self, name: str, manifest: dict,
                             subdirs: list[str]):
-        """(resolved state dir, lower, {subdir: pinned frame}) from ONE
-        published state snapshot. A concurrent fold's publish can flip
-        the pointer and GC the copy we resolved mid-pin (the grace
-        window is a knob; gc_grace_versions=0 GCs immediately) — the
-        documented reader contract is re-resolve and retry
-        (docs/scale.md read-repair), which is exact here because marker
-        and state re-read together: a newer snapshot means a larger
-        lower and a correspondingly smaller delta."""
+        """(lower, {subdir: pinned frame}) from ONE published state
+        snapshot (see _snapshot for the re-resolve-and-retry)."""
+        return self._snapshot(
+            self._state_path(name), manifest,
+            lambda d, lower: (lower, self._pin_parts(d, subdirs)),
+        )
+
+    def _pin_parts(self, d: str, subdirs: list[str]) -> dict[str, DataFrame]:
+        """Eagerly pinned carry-state parts of resolved state dir `d`."""
         from concurrent.futures import ThreadPoolExecutor
 
-        last: Exception | None = None
-        for _ in range(6):
-            d = self._live(self._state_path(name))
-            lower = self._published_lower(manifest, d)
-            try:
-                parts_dir = os.path.join(d, self._PARTS_SUBDIR)
-                if os.path.isdir(parts_dir):
-                    # batched layout: ONE pinned read of the partitioned
-                    # state serves every part (one Spark job instead of
-                    # one per subdir); each part selects its sidecar
-                    # schema back off the checkpointed rows. A part that
-                    # was empty at write time has no partition dir (its
-                    # filter just matches nothing); if EVERY part was
-                    # empty there is nothing to read at all and each pin
-                    # reconstructs from the sidecar schema.
-                    has_files = any(
-                        e.startswith(f"{self._PART_COL}=")
-                        for e in os.listdir(parts_dir)
+        parts_dir = os.path.join(d, self._PARTS_SUBDIR)
+        if os.path.isdir(parts_dir):
+            # batched layout: ONE pinned read of the partitioned state
+            # serves every part (one Spark job instead of one per
+            # subdir); each part selects its sidecar schema back off the
+            # checkpointed rows. A part that was empty at write time has
+            # no partition dir (its filter just matches nothing); if
+            # EVERY part was empty there is nothing to read at all and
+            # each pin reconstructs from the sidecar schema.
+            has_files = any(
+                e.startswith(f"{self._PART_COL}=") for e in os.listdir(parts_dir)
+            )
+            whole = (
+                self.engine.spark.read.parquet(parts_dir).localCheckpoint(
+                    eager=True
+                )
+                if has_files
+                else None
+            )
+            pins = {}
+            for s in subdirs:
+                schema = self._state_part_schema_at(d, s)
+                if schema is None:
+                    raise FileNotFoundError(
+                        f"state part {s!r} does not exist under {d}"
                     )
-                    whole = (
-                        self.engine.spark.read.parquet(parts_dir).localCheckpoint(
-                            eager=True
-                        )
-                        if has_files
-                        else None
+                if whole is None:
+                    pins[s] = self.engine.spark.createDataFrame([], schema)
+                else:
+                    pins[s] = whole.where(F.col(self._PART_COL) == s).select(
+                        *[f.name for f in schema.fields]
                     )
-                    pins = {}
-                    for s in subdirs:
-                        schema = self._state_part_schema_at(d, s)
-                        if schema is None:
-                            raise FileNotFoundError(
-                                f"state part {s!r} does not exist under {d}"
-                            )
-                        if whole is None:
-                            pins[s] = self.engine.spark.createDataFrame(
-                                [], schema
-                            )
-                        else:
-                            pins[s] = whole.where(
-                                F.col(self._PART_COL) == s
-                            ).select(*[f.name for f in schema.fields])
-                    return d, lower, pins
+            return pins
 
-                # legacy per-directory layout: pin jobs are independent
-                # small reads — run them concurrently (each is a Spark
-                # job; serial pins were a measured second of serve-path
-                # latency under load)
-                def pin_in_pool(p: str):
-                    # fresh thread: re-tag the serve pool (local
-                    # properties are per-thread under pinned-thread mode)
-                    from sneldb_spark.session import set_scheduler_pool
+        # legacy per-directory layout: pin jobs are independent small
+        # reads — run them concurrently (each is a Spark job; serial pins
+        # were a measured second of serve-path latency under load)
+        def pin_in_pool(p: str):
+            # fresh thread: re-tag the serve pool (local properties are
+            # per-thread under pinned-thread mode)
+            from sneldb_spark.session import set_scheduler_pool
 
-                    set_scheduler_pool(self.engine.spark, "sneldb-serve")
-                    return self._pin(p)
+            set_scheduler_pool(self.engine.spark, "sneldb-serve")
+            return self._pin(p)
 
-                with ThreadPoolExecutor(max_workers=len(subdirs)) as px:
-                    futs = {
-                        s: px.submit(pin_in_pool, os.path.join(d, s))
-                        for s in subdirs
-                    }
-                    pins = {s: f.result() for s, f in futs.items()}
-                return d, lower, pins
-            except Exception as e:  # noqa: BLE001 — retry only read races
-                if not self._is_missing_file_err(e):
-                    raise
-                last = e
-        raise last
+        with ThreadPoolExecutor(max_workers=len(subdirs)) as px:
+            futs = {s: px.submit(pin_in_pool, os.path.join(d, s)) for s in subdirs}
+            return {s: f.result() for s, f in futs.items()}
 
     def _published_lower(self, manifest: dict, marker_dir: str) -> tuple[int, int]:
         """max(manifest hwm, state marker) — the same recovery rule every
@@ -1822,7 +1803,7 @@ class Materializer:
             lower = tuple(marker)
         return lower
 
-    def _serve_plain(self, q, path: str, lower, cur):
+    def _serve_plain(self, name: str, q, manifest: dict, path: str, cur):
         """(serve frame, fold bundle). The delta slice is lazily
         localCheckpointed so the serve drain and the background fold
         SHARE one computation — the fold writes the same rows instead
@@ -1831,6 +1812,7 @@ class Materializer:
         src/command/handlers/show/delta/refresher.rs)."""
         from sneldb_spark.plans.filters import hwm_at_or_before
 
+        lower = self._published_lower(manifest, path)
         delta = self._delta_slice(
             self.engine.compiler.compile_query(q).where(hwm_at_or_before(*cur)),
             *lower,
@@ -1845,7 +1827,7 @@ class Materializer:
         the background fold so it never re-runs the match."""
         from sneldb_spark.plans.sequence import sequence_match
 
-        _d, lower, pins = self._pin_state_snapshot(
+        lower, pins = self._pin_state_snapshot(
             name, manifest, ["pending_a", "boundary_b"]
         )
         a, b, kind, link, _ts_a, _ts_b = self._seq_sides(q, upper=cur)
@@ -1915,12 +1897,8 @@ class Materializer:
         immediately while the bundle gives the fold the SAME frames to
         persist (segment + next state) without a second advance."""
         parts = self.engine.compiler.chain_parts(q, upper=cur)
-        n = len(parts[0])
-        _d, lower, pins = self._pin_state_snapshot(
-            name,
-            manifest,
-            [f"pending_s{i}" for i in range(n - 1)]
-            + [f"boundary_{j}" for j in range(1, n)],
+        lower, pins = self._pin_state_snapshot(
+            name, manifest, self._chain_state_parts(len(parts[0]))
         )
         completed, new_pend, cands, n = self._chain_delta_frames(
             q, cur, lower, pins, parts
@@ -1944,6 +1922,8 @@ class Materializer:
         from sneldb_spark.plans.filters import hwm_at_or_before
 
         lower = self._published_lower(manifest, path)
+        if tuple(lower) >= tuple(cur):
+            return  # an earlier (crashed) fold already appended this slice
         if served is not None and tuple(served["lower"]) == tuple(lower):
             delta_df = served["delta"]
         else:
@@ -1961,27 +1941,29 @@ class Materializer:
         self._write_state_hwm(path, *cur)
 
     def _fold_and_commit(self, name: str, q, manifest: dict, path: str,
-                         cur: tuple[int, int], refresh_fn, marker_dir: str,
-                         served: dict | None = None):
+                         cur: tuple[int, int], refresh_fn,
+                         served=None):
         """Background-fold body: run the refresh, then commit the
         manifest hwm — the same ordering the sync path uses. Folds are
         serialized per name (one thread at a time), so re-reading the
-        published lower here is authoritative: a SHOW that raced the
-        previous fold's commit schedules a redundant fold, and this
-        check turns it into a no-op instead of an idempotent re-run.
+        manifest here is authoritative: a SHOW that raced the previous
+        fold's commit schedules a redundant fold, and this check turns
+        it into a no-op. A refresh body whose published snapshot is
+        already at or past `cur` (a crashed fold got further than the
+        manifest) only finishes the publish, never re-merges.
 
         `served` is the serve path's fold bundle (the already-built
-        delta/match frames, lazily checkpointed): the refresh writes
-        those rows instead of recomputing the slice. If the bundle's
-        serve-time file listing outlived the source's GC grace window
-        (event-store compaction between serve and fold), the write
-        fails with a missing-file error and the fold falls back to a
-        full recompute from fresh listings — every refresh is
-        idempotent (interval-named segment overwrite + staged state),
-        so the retry is safe at any failure point before the publish."""
+        delta/match/merge frames): the refresh writes those rows instead
+        of recomputing them. If the bundle's serve-time file listing
+        outlived the source's GC grace window (event-store compaction
+        between serve and fold), the write fails with a missing-file
+        error and the fold falls back to a full recompute from fresh
+        listings — every refresh is idempotent (interval-named segment
+        overwrite + staged state), so the retry is safe at any failure
+        point before the publish."""
         with open(self._manifest_path(name)) as f:
             m = json.load(f)
-        if tuple(self._published_lower(m, marker_dir)) >= tuple(cur):
+        if (m["hwm_ts"], m["hwm_id"]) >= tuple(cur):
             return
         try:
             refresh_fn(name, q, m, path, cur, served)
@@ -2009,67 +1991,91 @@ class Materializer:
                 # a slow reader is safe.
                 self.compact(name)
 
-    def _try_serve_first(self, name: str, q, manifest: dict, path: str,
-                         cur: tuple[int, int]):
-        """If (and only if) the stale materialization is one of the
-        append-only segment shapes, build the `stored ∪ delta` serve
-        frame, schedule the background fold, and return the frame;
-        None routes the caller to the synchronous ladder. The dispatch
-        predicates mirror show()'s ladder order exactly."""
-        if self._incrementable(q) and manifest.get("segments"):
-            lower = self._published_lower(manifest, path)
-            serve, bundle = self._serve_plain(q, path, lower, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur,
-                    self._refresh_plain_segments, path, bundle,
-                ),
-            )
-            return serve
-        if self._incrementable(q):
-            return None  # non-segment plain layout: replace semantics
-        # agg shapes (state merges) stay synchronous — ladder order:
-        # seq_agg and chain_agg are checked BEFORE chain/seq there, and
-        # both require state_keys, which the event-shaped layouts never
-        # set, so falling through on them is dispatch-equivalent.
-        if manifest.get("state_keys") is not None or manifest["query"].get(
-            "compare"
-        ):
-            return None
+    def _refresher(self, name: str, q, manifest: dict):
+        """(refresh body, serve function or None) of a stale
+        materialization: the ONE dispatch the synchronous SHOW and the
+        serve-first SHOW share. A refresh body is
+        `(name, q, manifest, path, cur, served=None)`; a serve function is
+        `(name, q, manifest, path, cur) -> (frame, fold bundle)`."""
         state_d = self._live(self._state_path(name))
+        seq_state = manifest.get("seq_state")
+        agg_state = (
+            seq_state
+            and manifest.get("state_keys") is not None
+            and os.path.exists(os.path.join(state_d, "agg_state"))
+        )
+        if self._incrementable(q):
+            if manifest.get("segments"):
+                return self._refresh_plain_segments, self._serve_plain
+            return self._refresh_replace, None
+        if agg_state and self._seq_agg_incrementable(q, manifest):
+            return (
+                self._refresh_sequence_agg,
+                self._serve_merged(self._seq_agg_bundle),
+            )
         if (
-            self._chain_incrementable(q, manifest)
-            and manifest.get("seq_state")
+            agg_state
+            and self._chain_agg_incrementable(q, manifest)
             and self._state_part_exists_at(state_d, "pending_s0")
         ):
-            serve, bundle = self._serve_chain(name, q, manifest, path, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur, self._refresh_chain,
-                    self._state_path(name), bundle,
-                ),
+            return (
+                self._refresh_chain_agg,
+                self._serve_merged(self._chain_agg_bundle),
             )
-            return serve
         if (
-            self._seq_incrementable(q, manifest)
-            and manifest.get("seq_state")
+            seq_state
+            and self._chain_incrementable(q, manifest)
+            and self._state_part_exists_at(state_d, "pending_s0")
+        ):
+            return self._refresh_chain, self._serve_chain
+        if (
+            seq_state
+            and self._seq_incrementable(q, manifest)
             and self._state_part_exists_at(state_d, "pending_a")
         ):
-            serve, bundle = self._serve_seq(name, q, manifest, path, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur, self._refresh_sequence,
-                    self._state_path(name), bundle,
-                ),
-            )
-            return serve
-        return None
+            return self._refresh_sequence, self._serve_seq
+        if (
+            self._agg_incrementable(q, manifest)
+            and manifest.get("state_keys") is not None
+            and self.storage.exists(self._state_path(name))
+        ):
+            return self._refresh_agg, self._serve_merged(self._agg_bundle)
+        if (
+            self._compare_incrementable(q, manifest)
+            and manifest.get("compare_state_keys") is not None
+            and self.storage.exists(self._compare_state_dir(name, 0))
+        ):
+            return self._refresh_compare, self._serve_compare
+        return self._refresh_full, None
+
+    def _refresh_replace(self, name: str, q, manifest: dict, path: str,
+                         cur: tuple[int, int], served=None):
+        """Event result with retention: stored ∪ delta, deduped by
+        event_id, retention re-applied, replaced as a whole."""
+        delta_df = self._delta_slice(
+            self.engine.compiler.compile_query(q),
+            manifest["hwm_ts"], manifest["hwm_id"],
+        )
+        stored = self.engine.spark.read.parquet(self._live(path))
+        self._swap_in(
+            self._apply_retention(
+                stored.unionByName(delta_df).dropDuplicates(["event_id"]),
+                manifest,
+            ),
+            path,
+        )
+
+    def _refresh_full(self, name: str, q, manifest: dict, path: str,
+                      cur: tuple[int, int], served=None):
+        """No incremental form: recompute, closed at the already-probed
+        mark so the stored rows and the recorded hwm always describe the
+        same snapshot."""
+        self._swap_in(
+            self._apply_retention(
+                self.engine.compiler.compile(q, upper=cur), manifest
+            ),
+            path,
+        )
 
     def show(self, name: str) -> DataFrame:
         if not self.exists(name):
@@ -2110,74 +2116,23 @@ class Materializer:
                         self.storage.recover_dir(
                             self._compare_state_dir(name, i)
                         )
-        cur_ts, cur_id = self._source_hwm(q)
-        stale = (cur_ts, cur_id) != (manifest["hwm_ts"], manifest["hwm_id"])
-
-        if stale and self.serve_first:
-            served = self._try_serve_first(
-                name, q, manifest, path, (cur_ts, cur_id)
-            )
-            if served is not None:
-                return served
-
-        if stale and self._incrementable(q) and manifest.get("segments"):
-            self._refresh_plain_segments(
-                name, q, manifest, path, (cur_ts, cur_id)
-            )
-        elif stale and self._incrementable(q):
-            delta_df = self._delta_slice(
-                self.engine.compiler.compile_query(q),
-                manifest["hwm_ts"], manifest["hwm_id"],
-            )
-            stored = self.engine.spark.read.parquet(self._live(path))
-            merged = self._apply_retention(
-                stored.unionByName(delta_df).dropDuplicates(["event_id"]), manifest
-            )
-            self._swap_in(merged, path)
-        elif stale and self._seq_agg_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and manifest.get("state_keys") is not None and os.path.exists(
-            self._seq_agg_state_path(name)
-        ):
-            self._refresh_sequence_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._chain_agg_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and manifest.get("state_keys") is not None and os.path.exists(
-            self._seq_agg_state_path(name)
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_s0"
-        ):
-            self._refresh_chain_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._chain_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_s0"
-        ):
-            self._refresh_chain(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._seq_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_a"
-        ):
-            self._refresh_sequence(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._agg_incrementable(q, manifest) and manifest.get(
-            "state_keys"
-        ) is not None and self.storage.exists(self._state_path(name)):
-            self._refresh_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._compare_incrementable(q, manifest) and manifest.get(
-            "compare_state_keys"
-        ) is not None and self.storage.exists(self._compare_state_dir(name, 0)):
-            self._refresh_compare(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale:
-            # closed at the already-probed mark: the stored rows and the
-            # recorded hwm always describe the same snapshot
-            df = self._apply_retention(
-                self.engine.compiler.compile(q, upper=(cur_ts, cur_id)), manifest
-            )
-            self._swap_in(df, path)
-
-        if stale:
-            manifest["hwm_ts"], manifest["hwm_id"] = cur_ts, cur_id
+        cur = self._source_hwm(q)
+        if tuple(cur) != (manifest["hwm_ts"], manifest["hwm_id"]):
+            refresh, serve = self._refresher(name, q, manifest)
+            if self.serve_first and serve is not None:
+                # serve-then-refresh: the frame is exact as of `cur`
+                # now; the fold persists the same rows in the background
+                frame, bundle = serve(name, q, manifest, path, cur)
+                self._register_serve(name, frame)
+                self._schedule_fold(
+                    name,
+                    lambda: self._fold_and_commit(
+                        name, q, dict(manifest), path, cur, refresh, bundle
+                    ),
+                )
+                return frame
+            refresh(name, q, manifest, path, cur)
+            manifest["hwm_ts"], manifest["hwm_id"] = cur
             self._write_manifest(name, manifest)
         if manifest.get("segments") or (
             manifest.get("seq_state") and manifest.get("state_keys") is None

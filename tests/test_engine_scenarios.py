@@ -963,11 +963,15 @@ def test_remember_show_sequence_aggregate_incremental(spark, tmp_path):
     assert rows(shown) == rows(db.query(q))
     got = {r["k"]: (r["count"], r["count_unique_user_id"]) for r in shown.collect()}
     assert got == {1: (2, 2), 7: (2, 2)}
+    # the refresh runs in the SHOW's background fold: let it land (a
+    # fold still in flight would make the next SHOW skip scheduling)
+    assert db.materializer.quiesce() == []
 
     # phase 3: one more delta through the refreshed state
     store("signup", "u5", 7); store("purchase", "u5")
     db.execute("FLUSH")
     assert rows(db.execute("SHOW funnel_by_k").df) == rows(db.query(q))
+    assert db.materializer.quiesce() == []
     assert refreshes["n"] == 2
 
     # ungrouped sequence aggregate refreshes through the same path
@@ -1010,6 +1014,9 @@ def test_sequence_aggregate_refresh_is_crash_idempotent(spark, tmp_path):
     store("signup", "u2"); store("purchase", "u2")
     db.execute("FLUSH")
     assert db.execute("SHOW ft").df.collect()[0]["count"] == 2
+    # serve-first SHOW folds in the background: join it so the manifest
+    # rollback below actually simulates a crash AFTER the state swap
+    assert db.materializer.quiesce("ft") == []
 
     # crash simulation: manifest hwm rolls back, state dirs stay swapped
     post = _json.loads(mpath.read_text())
@@ -1274,13 +1281,13 @@ def test_multi_link_chain_extension(spark, tmp_path):
     assert db.query(q + " LIMIT 0").count() == 0
 
 
-def test_remember_compare_crash_between_side_merge_and_manifest(spark, tmp_path):
+def test_remember_compare_crash_between_side_merge_and_manifest(
+    spark, tmp_path, monkeypatch
+):
     """A crash after side 0's state swap (marker advanced) but before the
     manifest write must NOT double-merge side 0's delta on the next SHOW:
     the in-state hwm marker wins over the stale manifest lower bound."""
-    from sneldb_spark.commands.serde import compare_from_json
     from sneldb_spark.engine import SnelDB
-    import json as _json
 
     db = SnelDB(spark, str(tmp_path / "db"))
     db.execute('DEFINE m1 FIELDS { "v": "int" }')
@@ -1295,16 +1302,18 @@ def test_remember_compare_crash_between_side_merge_and_manifest(spark, tmp_path)
     db.execute("FLUSH")
 
     m = db.materializer
-    with open(m._manifest_path("board")) as f:
-        manifest = _json.load(f)
-    c = compare_from_json(manifest["query"])
-    cur = m._source_hwm(c)
+    publish = m.storage.publish_dir
+
+    def crash_after_side_0(dst, *a, **kw):
+        if dst == m._compare_state_dir("board", 1):
+            raise RuntimeError("crash after side 0's state publish")
+        return publish(dst, *a, **kw)
+
     # simulate the partial refresh: side 0 merged + marker advanced, then crash
-    m._merge_state_delta(
-        m._compare_state_dir("board", 0), c.queries[0],
-        manifest["compare_state_keys"][0],
-        (manifest["hwm_ts"], manifest["hwm_id"]), cur,
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(m.storage, "publish_dir", crash_after_side_0)
+        db.execute("SHOW board").df.collect()
+        assert len(m.quiesce("board")) == 1
     # next SHOW resumes: side 0 skipped via marker, side 1 merged, result exact
     got = sorted(tuple(r) for r in db.execute("SHOW board").df.collect())
     want = sorted(tuple(r) for r in db.execute(

@@ -520,8 +520,7 @@ def test_fold_falls_back_when_served_bundle_unreadable(spark, tmp_path):
     shutil.rmtree(gone)
     bundle = {"lower": tuple(lower), "delta": poisoned}
     mat._fold_and_commit(
-        "mfb", q, manifest, path, cur, mat._refresh_plain_segments, path,
-        bundle,
+        "mfb", q, manifest, path, cur, mat._refresh_plain_segments, bundle,
     )
     # fallback recomputed the real slice and committed
     with open(mat._manifest_path("mfb")) as f:
@@ -586,3 +585,215 @@ def test_show_limit_transfers_serve_pin(spark, tmp_path):
     del held
     gc.collect()
     assert not db.materializer._serves_outstanding("mpin")
+
+
+# -- state-merge shapes: agg, seq-agg, chain-agg, COMPARE --------------------
+# A stale SHOW serves finalize(merge(pinned state, delta)) from one eager
+# checkpoint and the background fold publishes those same rows as the next
+# state and result.
+
+_STATE_SHAPES = {
+    "agg": ({}, ("ev",), "QUERY ev COUNT, TOTAL n, COUNT UNIQUE u BY k",
+            "_refresh_agg"),
+    "approx_unique": ({"approx_count_unique": True}, ("ev",),
+                      "QUERY ev COUNT, COUNT UNIQUE u BY k", "_refresh_agg"),
+    "seq_agg": ({}, ("a", "b"),
+                "QUERY a FOLLOWED BY b LINKED BY u COUNT BY k",
+                "_refresh_sequence_agg"),
+    "chain_agg": ({"multi_link": True}, ("a", "b", "c"),
+                  "QUERY a FOLLOWED BY b FOLLOWED BY c LINKED BY u "
+                  "COUNT, COUNT UNIQUE u BY k",
+                  "_refresh_chain_agg"),
+    "compare": ({}, ("a", "b"), "PLOT COUNT OF a VS COUNT OF b BREAKDOWN BY k",
+                "_refresh_compare"),
+}
+
+
+def _state_db(spark, tmp_path, shape, **kw):
+    opts, types, text, refresh = _STATE_SHAPES[shape]
+    db = _mk_db(spark, tmp_path, **opts, **kw)
+    for t in types:
+        db.execute(f'DEFINE {t} FIELDS {{ "u": "string", "k": "int", "n": "int" }}')
+    return db, types, text, refresh
+
+
+def _feed(db, types, r):
+    """One ingest round: two full funnels, the tail of the previous
+    round's head-only funnel, then — after the FLUSH, so they stay in
+    the memtable — one more full funnel and a new head-only funnel."""
+    def funnel(u, k, n, steps):
+        for t in steps:
+            _store(db, t, f"{u}-{t}", {"u": u, "k": k, "n": n})
+
+    for i in (2 * r, 2 * r + 1):
+        funnel(f"u{i % 3}", i % 2, i, types)
+    if r:
+        funnel(f"h{r - 1}", 1, r, types[1:])
+    db.execute("FLUSH")
+    funnel(f"m{r}", 0, 100 + r, types)
+    funnel(f"h{r}", 1, r, types[:1])
+
+
+def _rows(df):
+    """Order-free rows, columns matched by name."""
+    return sorted(
+        (tuple(sorted(r.asDict().items())) for r in df.collect()), key=repr
+    )
+
+
+def _hwm(db, name):
+    with open(db.materializer._manifest_path(name)) as f:
+        m = json.load(f)
+    return m["hwm_ts"], m["hwm_id"]
+
+
+@pytest.mark.parametrize("shape", list(_STATE_SHAPES))
+def test_state_merge_show_serves_first_exact(spark, tmp_path, shape):
+    db, types, text, _ = _state_db(spark, tmp_path, shape)
+    mat = db.materializer
+    _feed(db, types, 0)
+    db.execute(f"REMEMBER {text} AS m")
+    for r in (1, 2, 3):
+        _feed(db, types, r)
+        want = _rows(db.execute(text).df)
+        assert _rows(db.execute("SHOW m").df) == want
+        assert mat.quiesce("m") == []
+        assert not mat.describe("m")["stale"]
+        # the fold published exactly the rows the SHOW served
+        assert _rows(db.execute("SHOW m").df) == want
+
+
+@pytest.mark.parametrize("shape", list(_STATE_SHAPES))
+def test_state_merge_show_returns_while_fold_stalled(spark, tmp_path, shape):
+    db, types, text, refresh = _state_db(spark, tmp_path, shape)
+    mat = db.materializer
+    _feed(db, types, 0)
+    db.execute(f"REMEMBER {text} AS m")
+    _feed(db, types, 1)
+    want = _rows(db.execute(text).df)
+    before = _hwm(db, "m")
+
+    gate = threading.Event()
+    orig = getattr(mat, refresh)
+
+    def stalled(*a, **kw):
+        gate.wait(timeout=30)
+        return orig(*a, **kw)
+
+    setattr(mat, refresh, stalled)
+    try:
+        assert _rows(db.execute("SHOW m").df) == want
+        d = mat.describe("m")
+        assert d["fold_in_flight"] and d["stale"]
+        # a second stale SHOW serves exactly and schedules no second fold
+        assert _rows(db.execute("SHOW m").df) == want
+        assert _hwm(db, "m") == before
+    finally:
+        gate.set()
+        setattr(mat, refresh, orig)
+    assert mat.quiesce("m") == []
+    assert not mat.describe("m")["stale"]
+    assert _rows(db.execute("SHOW m").df) == want
+
+
+@pytest.mark.parametrize("shape", list(_STATE_SHAPES))
+def test_state_merge_fold_crash_between_state_and_result_publish(
+    spark, tmp_path, shape, monkeypatch
+):
+    """The fold publishes the state (marker at cur) and crashes before
+    the result publish: the next SHOW merges from the marker — exact, the
+    delta is not merged twice — and its fold republishes the result."""
+    import os
+
+    db, types, text, _ = _state_db(spark, tmp_path, shape)
+    mat = db.materializer
+    _feed(db, types, 0)
+    db.execute(f"REMEMBER {text} AS m")
+    _feed(db, types, 1)
+    want = _rows(db.execute(text).df)
+    data = os.path.join(mat._dir("m"), "data")
+    publish = mat.storage.publish_dir
+
+    def crash_before_result(dst, *a, **kw):
+        if dst == data:
+            raise RuntimeError("crash before the result publish")
+        return publish(dst, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(mat.storage, "publish_dir", crash_before_result)
+        assert _rows(db.execute("SHOW m").df) == want
+        assert len(mat.quiesce("m")) == 1
+    assert mat.describe("m")["stale"]  # the manifest never advanced
+    assert _rows(db.execute("SHOW m").df) == want
+    assert mat.quiesce("m") == []
+    assert not mat.describe("m")["stale"]
+    assert _rows(db.execute("SHOW m").df) == want
+    _feed(db, types, 2)
+    assert _rows(db.execute("SHOW m").df) == _rows(db.execute(text).df)
+
+
+@pytest.mark.parametrize("shape", list(_STATE_SHAPES))
+def test_state_merge_sync_mode_refreshes_before_serving(spark, tmp_path, shape):
+    db, types, text, refresh = _state_db(
+        spark, tmp_path, shape, materialize_serve_first=False
+    )
+    mat = db.materializer
+    _feed(db, types, 0)
+    db.execute(f"REMEMBER {text} AS m")
+    _feed(db, types, 1)
+    threads = []
+    orig = getattr(mat, refresh)
+
+    def spy(*a, **kw):
+        threads.append(threading.current_thread())
+        return orig(*a, **kw)
+
+    setattr(mat, refresh, spy)
+    assert _rows(db.execute("SHOW m").df) == _rows(db.execute(text).df)
+    assert threads == [threading.current_thread()]
+    d = mat.describe("m")
+    assert not d["stale"] and not d["fold_in_flight"]
+
+
+@pytest.mark.parametrize("shape", ["seq", "seq_agg"])
+def test_show_retries_when_state_copy_vanishes_before_sidecar_read(
+    spark, tmp_path, shape, monkeypatch
+):
+    """A fold publish can GC the state copy a SHOW resolved between the
+    sidecar's existence check and its open. The open's FileNotFoundError
+    is a read race like the JVM's missing-file errors: SHOW re-resolves
+    the published copy and stays exact."""
+    import builtins
+    import os
+    import shutil
+
+    text = "QUERY a FOLLOWED BY b LINKED BY u" + (
+        " COUNT BY k" if shape == "seq_agg" else ""
+    )
+    db, types, _, _ = _state_db(spark, tmp_path, "seq_agg")
+    mat = db.materializer
+    _feed(db, types, 0)
+    db.execute(f"REMEMBER {text} AS m")
+    _feed(db, types, 1)
+    state = mat._state_path("m")
+    real_open = builtins.open
+    raced = []
+
+    def open_after_gc(file, *a, **kw):
+        if not raced and str(file).endswith(mat._PARTS_SIDECAR):
+            d = os.path.dirname(str(file))
+            raced.append(d)
+            # a concurrent publish: the same state goes live as a new
+            # copy and the resolved one is removed
+            shutil.copytree(d, mat.storage.stage_path(state))
+            mat.storage.publish_dir(state)
+            shutil.rmtree(d)
+        return real_open(file, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(builtins, "open", open_after_gc)
+        shown = _rows(db.execute("SHOW m").df)
+    assert raced and mat.storage.resolve(state) != raced[0]
+    assert shown == _rows(db.execute(text).df)
+    assert mat.quiesce("m") == []
+    assert _rows(db.execute("SHOW m").df) == shown

@@ -1,6 +1,7 @@
 """TCP frontend, response framing, snapshots, materialization retention."""
 
 import json
+import os
 
 import pytest
 
@@ -261,12 +262,16 @@ def test_http_arrow_accept_header(engine):
         server.stop()
 
 
+PROD_TOML = os.path.join(os.path.dirname(__file__), "fixtures", "prod.toml")
+
+
 def test_toml_config_loads_reference_prod_config(spark, tmp_path):
-    # The reference's own prod.toml must load unchanged: mechanism sections
-    # ([wal], [query], zones/shards) are accepted and ignored.
+    # A prod.toml laid out like the reference's must load unchanged:
+    # mechanism sections ([wal], [query], zones/shards) are accepted and
+    # ignored.
     from sneldb_spark.config import create_engine, load_config
 
-    cfg = load_config("/root/reference/config/prod.toml")
+    cfg = load_config(PROD_TOML)
     assert cfg.time.mode == "calendar" and cfg.time.week_start == "monday"
     assert cfg.auth is not None and cfg.auth.initial_admin_user == "admin"
     assert cfg.server.tcp_addr == "127.0.0.1:7171"
@@ -547,11 +552,11 @@ def test_playground_unauthenticated_loopback_bypass(spark, tmp_path):
 
 
 def test_toml_config_playground_and_rate_limit_keys(tmp_path):
-    """[playground] and [auth] rate_limit_* keys load from the reference's
-    own prod.toml and from explicit dicts."""
+    """[playground] and [auth] rate_limit_* keys load from a prod.toml
+    laid out like the reference's and from explicit dicts."""
     from sneldb_spark.config import load_config
 
-    cfg = load_config("/root/reference/config/prod.toml")
+    cfg = load_config(PROD_TOML)
     assert cfg.playground.enabled is True
     assert cfg.playground.allow_unauthenticated is True
     assert cfg.auth is not None

@@ -373,7 +373,9 @@ def test_obj_engine_agg_state_merge_refresh(obj_engine):
     _feed(db, "order", 2, start=20)
     rows = db.execute("SHOW agg").df.collect()
     assert rows[0]["count"] == 9
-    # the state dir is pointer-managed after its first merge-publish
+    # the state dir is pointer-managed after its first merge-publish,
+    # which the SHOW's background fold makes
+    assert db.materializer.quiesce("agg") == []
     state = db.materializer._state_path("agg")
     assert db._obj_storage.resolve(state) != state
 

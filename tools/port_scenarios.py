@@ -3,6 +3,10 @@ integration suite (reference: tests/integration/scenarios.json).
 
 Usage: python tools/port_scenarios.py [path-to-scenarios.json]
 
+The default source path (DEFAULT_SRC) points into a checkout of the
+reference server. It is read only to regenerate the scenarios; the test
+suite runs from the committed tests/_ported_scenarios.py alone.
+
 Port rules (mirroring tests/integration/{runner.rs,auth_helper.rs}):
 - auth configs with bypass_auth=false carry the initial admin credentials
   and an `auth_enforced` marker; everything else runs as the bypass
